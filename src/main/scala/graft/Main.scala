@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.ipc.ArrowIpc
-import graft.operators.SeqColumn
 import graft.sources.JsonConvert
 import graft.streaming.{FilePublisher, StreamPipeline}
 
@@ -21,17 +20,13 @@ import graft.streaming.{FilePublisher, StreamPipeline}
   *   graft.Main stream --host H --port P --out DIR
   *     [--schema battery|trip] [--schema-ddl "col TYPE, ..."]
   *     [--max-rows N] [--max-ipc BYTES] [--codec none|lz4|zstd]
-  *     [--seq-col] [--idle-timeout-ms T] [--no-strict]
+  *     [--seq-col] [--idle-timeout-ms T]
   *     — or RESTARTABLE file mode (r12): --in-dir DIR --checkpoint CKPT
   *       in place of --host/--port: drains every unprocessed ND-JSON
   *       file under DIR (Trigger.AvailableNow) and exits; re-running
   *       with the same checkpoint picks up ONLY new files, and with
-  *       --seq-col the seq column resumes contiguously from the
-  *       already-published output (recovered by decoding OUT's .arrow
-  *       files and --batch's .arrowbag envelopes — the at-rest truth,
-  *       not driver state, survives the restart; contiguity assumes the
-  *       prior run exited cleanly — a mid-batch crash replays with
-  *       monotone but possibly gapped seqs, see the recovery comment)
+  *       --seq-col the seq column resumes from the files already
+  *       published to OUT (StreamPipeline.resumeSeq)
   *     [--batch] [--batch-max-messages N] [--batch-max-bytes B]
   *     [--batch-max-delay MS]   (≙ bolson --pulsar-batch*)
   *     [--latency FILE] [--metrics FILE]   (≙ bolson -l / --metrics:
@@ -2181,10 +2176,16 @@ object Main {
     require(ckpt.isEmpty || inDir.isDefined,
       "--checkpoint is only meaningful with --in-dir (a socket replays nothing)")
     val out = opt(args, "--out").getOrElse(sys.error("--out required"))
-    val maxRows = opt(args, "--max-rows").map(_.toInt).getOrElse(4096)
-    val maxIpc = opt(args, "--max-ipc").map(_.toLong).getOrElse(5L * 1024 * 1024)
+    // limits and codec fail at CLI parse, not at the first micro-batch
+    // (in socket mode that is after a connection has been opened)
+    val maxRows = opt(args, "--max-rows").map(_.toInt)
+      .getOrElse(StreamPipeline.DefaultMaxRows)
+    require(maxRows > 0, s"--max-rows must be positive (got $maxRows)")
+    val maxIpc = opt(args, "--max-ipc").map(_.toLong)
+      .getOrElse(StreamPipeline.DefaultMaxIpc)
+    require(maxIpc > 0, s"--max-ipc must be positive (got $maxIpc)")
     val codec = opt(args, "--codec").getOrElse("none")
-    ArrowIpc.validateCodec(codec) // fail at CLI parse, not first micro-batch
+    ArrowIpc.validateCodec(codec)
     val seqCol = args.contains("--seq-col")
     val idleMs = opt(args, "--idle-timeout-ms").map(_.toLong)
     // producer batching ≙ bolson --pulsar-batch / --pulsar-batch-max-*
@@ -2208,178 +2209,84 @@ object Main {
     }
 
     val spark = GraftSession.get()
-    // per-batch latency tracking (bolson --latency, src/bolson/latency.h):
-    // attached whenever either dump file is requested
-    val latencyListener = new graft.metrics.LatencyListener()
+    // per-batch latency (bolson --latency, src/bolson/latency.h) and
+    // per-stage time (parse / serialize / publish, latency.h:30-40),
+    // tracked whenever either dump file is requested
     val wantDumps = latencyFile.isDefined || metricsFile.isDefined
-    if (wantDumps) spark.streams.addListener(latencyListener)
-    // per-stage time decomposition (parse / serialize / publish — bolson
-    // latency.h:30-40): accumulators summed task-side, per-batch deltas
-    // snapshotted driver-side after each foreachBatch action completes
-    val stageTimers =
-      if (wantDumps) Some(graft.metrics.StageTimers(spark.sparkContext)) else None
-    case class StageSample(batchId: Long, parseMs: Double,
-                           serializeMs: Double, publishMs: Double)
-    val stageSamples = scala.collection.mutable.ArrayBuffer[StageSample]()
-    var lastParse = 0.0; var lastSer = 0.0; var lastPub = 0.0
-    // per-stage publish totals across all micro-batches (bolson --metrics)
-    var totMsgs = 0L; var totRows = 0L; var totBytes = 0L
+    val latencyListener = new graft.metrics.LatencyListener()
+    val ledger = new StreamPipeline.Ledger(
+      if (wantDumps) Some(graft.metrics.StageTimers(spark.sparkContext)) else None)
     val lines = inDir match {
-      case Some(d) => spark.readStream
-        .option("maxFilesPerTrigger", "8").text(d)
-      case None => spark.readStream.format("socket")
-        .option("host", host).option("port", port.get).load()
+      case Some(d) => StreamPipeline.fileLines(spark, d)
+      case None => StreamPipeline.socketLines(spark, host, port.get)
     }
+    // bolson's --arrow-seq-col; in restartable file mode the seq resumes
+    // from the already-published output
+    val seqFrom =
+      if (!seqCol) None
+      else Some(if (inDir.isDefined) StreamPipeline.resumeSeq(spark, out, schema) else 0L)
 
-    // bolson's --arrow-seq-col: contiguous u64 ordering across the whole
-    // stream — per micro-batch the driver carries the running offset, and
-    // SeqColumn assigns contiguous ids inside the batch without a global
-    // sort (per-partition counts + offsets). In restartable file mode the
-    // offset seeds from the ALREADY-PUBLISHED output (max seq + 1): the
-    // at-rest files are the truth a restart must continue from — a driver
-    // variable would reset to 0 and fork the sequence. Both publisher
-    // layouts are decoded: one .arrow file per message (plain), and
-    // --batch's .arrowbag envelope files holding many length-prefixed
-    // messages each (recovery that scanned only .arrow would find nothing
-    // after a --batch run, reseed at 0, and emit duplicate seqs).
-    // Contiguity assumes the previous run EXITED CLEANLY (AvailableNow
-    // drained and committed): a run killed between publishing part of a
-    // micro-batch and its checkpoint commit will replay that batch with
-    // fresh seqs above the partially-published ones while overwriting the
-    // same epoch-named files — at-least-once delivery, monotone but
-    // possibly gapped seqs (the checkpoint, not the output dir, is what
-    // records commit points).
-    val publishedFiles: Seq[String] =
-      Option(new java.io.File(out).listFiles()).toSeq.flatten
-        .filter(f => f.getName.endsWith(".arrow") ||
-          f.getName.endsWith(".arrowbag"))
-        .map(_.getAbsolutePath).sorted
-    var seqOffset: Long =
-      if (seqCol && inDir.isDefined && publishedFiles.nonEmpty) {
-        import spark.implicits._
-        val withSeq = schema.add("seq", org.apache.spark.sql.types.LongType)
-        val published = spark.read.format("binaryFile")
-          .load(publishedFiles: _*)
-          .select(col("path"), col("content")).as[(String, Array[Byte])]
-          .flatMap { case (path, b) =>
-            if (path.endsWith(".arrowbag"))
-              // Files.write is not atomic: a crash mid-flush leaves a
-              // partial envelope whose decode throws (Magic require /
-              // buffer underflow). The restart contract is at-least-once
-              // — it tolerates replay, so it must also tolerate one torn
-              // tail file: skip it loudly and seed from the decodable
-              // remainder rather than refusing to start.
-              try graft.streaming.BatchEnvelope.decode(b)
-              catch {
-                case scala.util.control.NonFatal(e) =>
-                  System.err.println(
-                    s"[graft] WARN: seq recovery skipping undecodable " +
-                      s"envelope $path (truncated write?): ${e.getMessage}")
-                  Seq.empty
-              }
-            else Seq(graft.ipc.IpcMessage(0L, 0L, b.length.toLong, b))
+    if (wantDumps) spark.streams.addListener(latencyListener)
+    try {
+      val query = StreamPipeline.publishStream(lines, schema, mkPublisher,
+          maxRows, maxIpc, codec, seqFrom, ledger)
+        // restartable file mode: drain everything available then exit —
+        // the re-runnable shape; the checkpoint makes the NEXT run skip
+        // every file this one processed
+        .pipe(w => inDir.fold(w)(_ => w
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
+        .pipe(w => ckpt.fold(w)(c => w.option("checkpointLocation", c)))
+        .start()
+
+      if (inDir.isDefined) query.awaitTermination()
+      else idleMs match {
+        case Some(t) =>
+          while (System.currentTimeMillis() - ledger.lastProgressMs < t) {
+            query.processAllAvailable()
+            Thread.sleep(100)
           }
-        ArrowIpc.deserialize(spark, published, withSeq)
-          .agg(coalesce(max(col("seq")) + 1L, lit(0L))).head().getLong(0)
-      } else 0L
-    @volatile var lastProgress = System.currentTimeMillis()
-    // bolson parses with UnexpectedFieldBehavior::Error unconditionally
-    // (parse/arrow.cpp:89); strict is therefore the CLI default, with
-    // --no-strict opting into the cheaper relaxed parse
-    val strict = !args.contains("--no-strict")
-    val query = StreamPipeline.convert(lines, schema, strict).writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // persist exists ONLY for the retry-safe df.count() that keeps seq
-        // contiguity; without --seq-col the batch is consumed exactly once
-        // and caching it would be a pure memory tax
-        val df = if (seqCol) batch.toDF().persist() else batch.toDF()
-        try {
-          val withSeq =
-            if (!seqCol) df
-            else SeqColumn.withSeqInArrivalOrder(df)
-              .withColumn("seq", col("seq") + seqOffset)
-          // epoch = micro-batch id: batch ids restart per serialize() call,
-          // so files would overwrite across micro-batches without it
-          val stats = graft.streaming.Publish.run(
-            ArrowIpc.serialize(withSeq, maxRows, maxIpc, codec, stageTimers),
-            () => mkPublisher(batchId), stageTimers)
-          stageTimers.foreach { st =>
-            // accumulators are totals; the per-batch sample is the delta
-            // since the previous micro-batch (foreachBatch runs serially
-            // on the driver, so this bookkeeping needs no locking)
-            val (p, s, u) = (st.parseMs, st.serializeMs, st.publishMs)
-            stageSamples += StageSample(batchId, p - lastParse, s - lastSer, u - lastPub)
-            lastParse = p; lastSer = s; lastPub = u
-            // same retention cap as LatencyListener: the latency dump
-            // joins against at most its newest 1024 samples, and an
-            // unbounded buffer would grow the driver heap for the life
-            // of a long-running stream
-            if (stageSamples.length > 1024)
-              stageSamples.remove(0, stageSamples.length - 1024)
-          }
-          // advance the offset by an EXACT job-result count, not the
-          // publish accumulator: retried/speculative tasks re-add to
-          // accumulators and would silently break seq contiguity (count()
-          // on the cached batch is cheap and retry-safe)
-          if (seqCol) seqOffset += df.count()
-          totMsgs += stats.messages; totRows += stats.rows; totBytes += stats.bytes
-          if (stats.rows > 0) lastProgress = System.currentTimeMillis()
-        } finally if (seqCol) { df.unpersist(); () }
-        ()
+          query.stop()
+        case None => query.awaitTermination()
       }
-      // restartable file mode: drain everything available then exit —
-      // the re-runnable shape; the checkpoint makes the NEXT run skip
-      // every file this one processed
-      .pipe(w => inDir.fold(w)(_ => w
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())))
-      .pipe(w => ckpt.fold(w)(c => w.option("checkpointLocation", c)))
-      .start()
 
-    if (inDir.isDefined) query.awaitTermination()
-    else idleMs match {
-      case Some(t) =>
-        while (System.currentTimeMillis() - lastProgress < t) {
-          query.processAllAvailable()
-          Thread.sleep(100)
+      // shutdown dumps (bolson writes its latency/metrics files after the
+      // stream drains, src/bolson/stream.cpp + cli.cpp:62-66,92-94). The
+      // listener bus is asynchronous: wait for this run's termination
+      // event, which follows all of its progress events
+      if (wantDumps && !latencyListener.awaitTerminated(query.runId, 30000L))
+        System.err.println("[graft] WARN: query termination event not " +
+          "delivered within 30 s; the latency dumps may miss micro-batches")
+      latencyFile.foreach { f =>
+        // per-batch samples, joined with the per-stage deltas by batch id —
+        // the Spark rendering of bolson's per-seq-range latency dump
+        val stageById = ledger.stageSamples.map(s => s.batchId -> s).toMap
+        val rows = latencyListener.samples(query.runId).map { s =>
+          val st = stageById.get(s.batchId)
+          s"""{"batch_id":${s.batchId},"input_rows":${s.inputRows},""" +
+          s""""add_batch_ms":${s.addBatchMs},"trigger_ms":${s.triggerMs},""" +
+          f""""rows_per_sec":${s.rowsPerSec}%.1f""" +
+          st.map(x =>
+            f""","parse_ms":${x.parseMs}%.1f,"serialize_ms":${x.serializeMs}%.1f""" +
+            f""","publish_ms":${x.publishMs}%.1f""").getOrElse("") + "}"
         }
-        query.stop()
-      case None => query.awaitTermination()
-    }
-
-    // shutdown dumps (bolson writes its latency/metrics files after the
-    // stream drains, src/bolson/stream.cpp + cli.cpp:62-66,92-94)
-    latencyFile.foreach { f =>
-      // per-batch samples, joined with the per-stage deltas by batch id —
-      // the Spark rendering of bolson's per-seq-range latency dump
-      val stageById = stageSamples.map(s => s.batchId -> s).toMap
-      val rows = latencyListener.samples.map { s =>
-        val st = stageById.get(s.batchId)
-        s"""{"batch_id":${s.batchId},"input_rows":${s.inputRows},""" +
-        s""""add_batch_ms":${s.addBatchMs},"trigger_ms":${s.triggerMs},""" +
-        f""""rows_per_sec":${s.rowsPerSec}%.1f""" +
-        st.map(x =>
-          f""","parse_ms":${x.parseMs}%.1f,"serialize_ms":${x.serializeMs}%.1f""" +
-          f""","publish_ms":${x.publishMs}%.1f""").getOrElse("") + "}"
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
+          rows.mkString("[", ",", "]")); ()
       }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
-        rows.mkString("[", ",", "]")); ()
-    }
-    metricsFile.foreach { f =>
-      val lat = latencyListener.summary
-      val latJson = lat.toSeq.sortBy(_._1)
-        .map { case (k, v) => f""""$k":$v%.1f""" }.mkString(",")
-      val stageJson = stageTimers.map(st =>
-        f""","parse_ms_total":${st.parseMs}%.1f""" +
-        f""","serialize_ms_total":${st.serializeMs}%.1f""" +
-        f""","publish_ms_total":${st.publishMs}%.1f""").getOrElse("")
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
-        s"""{"messages_published":$totMsgs,"rows_published":$totRows,""" +
-        s""""bytes_published":$totBytes""" + stageJson +
-        (if (latJson.nonEmpty) s",$latJson" else "") + "}"); ()
-    }
-    if (latencyFile.isDefined || metricsFile.isDefined)
-      spark.streams.removeListener(latencyListener)
+      metricsFile.foreach { f =>
+        val lat = latencyListener.summary(query.runId)
+        val latJson = lat.toSeq.sortBy(_._1)
+          .map { case (k, v) => f""""$k":$v%.1f""" }.mkString(",")
+        val stageJson = ledger.timers.map(st =>
+          f""","parse_ms_total":${st.parseMs}%.1f""" +
+          f""","serialize_ms_total":${st.serializeMs}%.1f""" +
+          f""","publish_ms_total":${st.publishMs}%.1f""").getOrElse("")
+        java.nio.file.Files.writeString(java.nio.file.Paths.get(f),
+          s"""{"messages_published":${ledger.messages},""" +
+          s""""rows_published":${ledger.rows},""" +
+          s""""bytes_published":${ledger.bytes}""" + stageJson +
+          (if (latJson.nonEmpty) s",$latJson" else "") + "}"); ()
+      }
+    } finally if (wantDumps) spark.streams.removeListener(latencyListener)
     // no spark.stop(): the session may be shared (getOrCreate); CLI exit
     // tears it down with the JVM
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.ipc.{ArrowIpc, IpcMessage}
+import graft.ipc.ArrowIpc
 
 /** Verify-gate entry points for publish + metrics (SURVEY §2 a7, a9). */
 object PipelineQueries {
@@ -14,7 +14,6 @@ object PipelineQueries {
     * concurrently) → read the files back → rows. Identity oracle proves
     * no message was lost, duplicated, or corrupted by the publish path. */
   def a7Publisher(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val docs = Tables.documents(spark, dir)
     val schema = docs.schema
     // per-JVM scratch dir, cleared on entry: PID suffix prevents two JVMs
@@ -22,10 +21,7 @@ object PipelineQueries {
     // it instead of leaking one .arrow dataset per run
     val outDir = graft.GraftSession.scratchDir("a7-publish").toString
     Publish.run(ArrowIpc.serialize(docs, maxRows = 256), () => new FilePublisher(outDir))
-    val files = spark.read.format("binaryFile").load(s"$outDir/*.arrow")
-      .select(col("content")).as[Array[Byte]]
-      .map(b => IpcMessage(0L, 0L, b.length.toLong, b))
-    ArrowIpc.deserialize(spark, files, schema)
+    ArrowIpc.deserialize(spark, PublishedFiles.read(spark, outDir), schema)
       .transform(graft.operators.Relational.gateOrder("doc_id"))
   }
 

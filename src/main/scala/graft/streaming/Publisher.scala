@@ -1,12 +1,12 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.ipc.IpcMessage
 
@@ -137,6 +137,37 @@ class BatchingFilePublisher(dir: String, opts: BatchingOptions = BatchingOptions
   override def close(): Unit = inner.close()
 }
 
+/** The one reader of a publish directory: every message of its `.arrow`
+  * ([[FilePublisher]]) and `.arrowbag` ([[BatchingFilePublisher]]) files,
+  * in no particular order, ready for `ArrowIpc.deserialize`. */
+object PublishedFiles {
+
+  /** The published files under `dir` (none when it does not exist yet). */
+  private[streaming] def list(dir: String): Seq[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten.map(_.getAbsolutePath)
+      .filter(p => p.endsWith(".arrow") || p.endsWith(".arrowbag")).sorted
+
+  def read(spark: SparkSession, dir: String): Dataset[IpcMessage] = {
+    import spark.implicits._
+    val files = list(dir)
+    if (files.isEmpty) spark.emptyDataset[IpcMessage]
+    else spark.read.format("binaryFile").load(files: _*)
+      .select(col("path"), col("content")).as[(String, Array[Byte])]
+      .flatMap { case (path, b) =>
+        if (!path.endsWith(".arrowbag")) Seq(IpcMessage(0L, 0L, b.length.toLong, b))
+        // Files.write is not atomic: a crash mid-flush leaves a torn
+        // envelope. Delivery is at-least-once, so readers tolerate replay
+        // and must also tolerate that one file: skip it loudly
+        else try BatchEnvelope.decode(b) catch {
+          case scala.util.control.NonFatal(e) =>
+            System.err.println(s"[graft] WARN: skipping undecodable envelope " +
+              s"$path (truncated write?): ${e.getMessage}")
+            Seq.empty
+        }
+      }
+  }
+}
+
 /** Minimal broker-client SPI — the two-trait surface a real client jar
   * provides, mirroring pulsar::Client / pulsar::Producer (reference:
   * src/bolson/publish/publisher.cpp:55-77 client + producer creation,
@@ -192,7 +223,7 @@ class BrokerPublisher(mkClient: () => BrokerClient, topic: String,
   * same (epoch, batch_id) keys and OVERWRITES the partial first attempt
   * instead of duplicating it, modeling broker producer-idempotence the
   * same way FilePublisher's keyed file names do. Local-mode only
-  * (executors share the driver JVM), like CollectingPublisher. */
+  * (executors share the driver JVM). */
 object InMemoryBroker {
   private val topics = new java.util.concurrent.ConcurrentHashMap[
     String, java.util.concurrent.ConcurrentHashMap[String, Array[Byte]]]()
@@ -234,7 +265,7 @@ class InMemoryBrokerClient extends BrokerClient {
   *    (producer, sequence).
   * The failure arming is JVM-wide (companion AtomicLong) because the
   * publisher instance is constructed per partition task — local-mode
-  * specs share the JVM, exactly like CollectingPublisher. */
+  * specs share the JVM. */
 object FailNthPublisher {
   private val remaining = new java.util.concurrent.atomic.AtomicLong(-1L)
   /** Arm: the nth publish call (1-based, JVM-wide) will throw, once. */
@@ -261,21 +292,6 @@ class FailNthPublisher(inner: Publisher) extends Publisher {
 class NoopPublisher extends Publisher {
   override def open(partitionId: Int): Unit = ()
   override def publish(m: IpcMessage): Unit = ()
-  override def close(): Unit = ()
-}
-
-/** Test/local publisher collecting into a JVM-wide buffer. Local-mode only
-  * (executors share the driver JVM); clusters use FilePublisher or a real
-  * broker client. */
-object CollectingPublisher {
-  private val buf = new ConcurrentLinkedQueue[IpcMessage]()
-  def clear(): Unit = buf.clear()
-  def messages: Seq[IpcMessage] = buf.asScala.toSeq
-}
-
-class CollectingPublisher extends Publisher {
-  override def open(partitionId: Int): Unit = ()
-  override def publish(m: IpcMessage): Unit = { CollectingPublisher.buf.add(m); () }
   override def close(): Unit = ()
 }
 

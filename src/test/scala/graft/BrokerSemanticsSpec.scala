@@ -3,12 +3,11 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.ipc.{ArrowIpc, IpcMessage}
 import graft.streaming.{BrokerPublisher, FailNthPublisher, FilePublisher,
-  InMemoryBroker, InMemoryBrokerClient, Publish, StreamPipeline}
+  InMemoryBroker, InMemoryBrokerClient, PublishedFiles, StreamPipeline}
 
 /** Broker delivery semantics behind the Publisher seam (no broker exists
   * in this sandbox, so the CONTRACT is spec'd instead): a failed publish
@@ -30,14 +29,10 @@ class BrokerSemanticsSpec extends SparkSpec {
 
     val stream = MemoryStream[String]
     def startQuery() =
-      StreamPipeline.convert(stream.toDF(), schema).writeStream
-        .outputMode("append")
+      StreamPipeline.publishStream(stream.toDF(), schema,
+          epoch => new FailNthPublisher(new FilePublisher(outDir, epoch)),
+          maxRows = 64)
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-          Publish.run(ArrowIpc.serialize(batch.toDF(), maxRows = 64),
-            () => new FailNthPublisher(new FilePublisher(outDir, epoch)))
-          ()
-        }
         .start()
 
     // arm: the 3rd publish call of the JVM fails once — mid-batch, so the
@@ -72,10 +67,7 @@ class BrokerSemanticsSpec extends SparkSpec {
       q2.stop()
       spark.streams.resetTerminated()
 
-      val readBack = spark.read.format("binaryFile").load(s"$outDir/*.arrow")
-        .select(col("content")).as[Array[Byte]]
-        .map(b => IpcMessage(0L, 0L, b.length.toLong, b))
-      val rows = ArrowIpc.deserialize(spark, readBack, schema)
+      val rows = ArrowIpc.deserialize(spark, PublishedFiles.read(spark, outDir), schema)
         .orderBy("id").collect()
       assert(rows.length == n,
         s"replay must deliver every row exactly once at the sink, got ${rows.length}")
@@ -95,17 +87,13 @@ class BrokerSemanticsSpec extends SparkSpec {
 
     val stream = MemoryStream[String]
     def startQuery() =
-      StreamPipeline.convert(stream.toDF(), schema).writeStream
-        .outputMode("append")
+      // the compile-checked drop-in: Publisher → BrokerPublisher →
+      // BrokerClient SPI; a Pulsar/Kafka adapter swaps the factory
+      StreamPipeline.publishStream(stream.toDF(), schema,
+          epoch => new FailNthPublisher(
+            new BrokerPublisher(() => new InMemoryBrokerClient, topic, epoch)),
+          maxRows = 64)
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-          // the compile-checked drop-in: Publisher → BrokerPublisher →
-          // BrokerClient SPI; a Pulsar/Kafka adapter swaps the factory
-          Publish.run(ArrowIpc.serialize(batch.toDF(), maxRows = 64),
-            () => new FailNthPublisher(
-              new BrokerPublisher(() => new InMemoryBrokerClient, topic, epoch)))
-          ()
-        }
         .start()
 
     InMemoryBroker.clear()

@@ -7,7 +7,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.ipc.{ArrowIpc, IpcMessage}
+import graft.ipc.ArrowIpc
+import graft.streaming.PublishedFiles
 
 /** End-to-end CLI spec: `graft stream` drains a TCP ND-JSON feed into
   * bounded Arrow IPC files with a contiguous seq column — the bolson
@@ -15,7 +16,6 @@ import graft.ipc.{ArrowIpc, IpcMessage}
 class CliSpec extends SparkSpec {
 
   test("stream subcommand: socket → IPC files with contiguous seq") {
-    import spark.implicits._
     val server = new ServerSocket(0)
     val port = server.getLocalPort
     val outDir = Files.createTempDirectory("graft-cli-").toString
@@ -43,14 +43,15 @@ class CliSpec extends SparkSpec {
       "--latency", latFile, "--metrics", metFile))
 
     val schema = StructType.fromDDL("id BIGINT, v BIGINT, seq BIGINT")
-    val msgs = SparkSpec.session.read.format("binaryFile").load(s"$outDir/*.arrow")
-      .select(col("content")).as[Array[Byte]]
-      .map(b => IpcMessage(0L, 0L, b.length.toLong, b))
-    val rows = ArrowIpc.deserialize(SparkSpec.session, msgs, schema)
+    val rows = ArrowIpc.deserialize(spark, PublishedFiles.read(spark, outDir), schema)
       .orderBy("seq").collect()
     assert(rows.length == n, s"published ${rows.length} of $n rows")
     assert(rows.map(_.getAs[Long]("seq")).toSeq == (0L until n).toSeq,
       "seq contiguous across micro-batches")
+    // the feeder sends id i as the i-th line: seq must follow arrival
+    // order, not the order of the partitions the lines were dealt to
+    rows.foreach(r => assert(r.getAs[Long]("seq") == r.getAs[Long]("id"),
+      s"seq follows arrival order: $r"))
     rows.foreach(r => assert(r.getAs[Long]("v") == r.getAs[Long]("id") * 2))
 
     // --latency / --metrics shutdown dumps (bolson cli.cpp:62-66,92-94):
@@ -60,7 +61,7 @@ class CliSpec extends SparkSpec {
       s"latency dump has per-batch samples: $lat")
     val sampleRows = "\"input_rows\":(\\d+)".r
       .findAllMatchIn(lat).map(_.group(1).toLong).sum
-    assert(sampleRows >= n, s"latency samples account for all $n rows: $lat")
+    assert(sampleRows == n, s"latency samples account for all $n rows: $lat")
     val met = Files.readString(java.nio.file.Paths.get(metFile))
     assert(met.contains(s"\"rows_published\":$n"), s"metrics totals: $met")
     assert(met.contains("\"messages_published\""), s"metrics totals: $met")
@@ -1495,36 +1496,33 @@ class CliSpec extends SparkSpec {
     assert(got.toSeq == want.toSeq, "CLI curriculum diverges from the c86 gate")
   }
 
+  /** Writes `{"id": i, "v": 3i}` ND-JSON lines, then `extra` lines, to dir/name. */
+  private def writeLines(dir: String, name: String, ids: Range, extra: String*): Unit = {
+    Files.createDirectories(java.nio.file.Paths.get(dir))
+    Files.writeString(java.nio.file.Paths.get(dir, name),
+      (ids.map(i => s"""{"id": $i, "v": ${i * 3}}""") ++ extra).mkString("", "\n", "\n")); ()
+  }
+
   test("stream --in-dir: restartable file drain resumes without duplicates, seq contiguous") {
-    import spark.implicits._
     val tmp = Files.createTempDirectory("graft-cli-resume-").toString
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    Files.createDirectories(java.nio.file.Paths.get(inDir))
-    def writeBatch(name: String, ids: Range): Unit = {
-      val w = new PrintWriter(s"$inDir/$name")
-      ids.foreach(i => w.println(s"""{"id": $i, "v": ${i * 3}}"""))
-      w.close()
-    }
     def drained(): Seq[(Long, Long, Long)] = {
       val schema = StructType.fromDDL("id BIGINT, v BIGINT, seq BIGINT")
-      val msgs = spark.read.format("binaryFile").load(s"$outDir/*.arrow")
-        .select(col("content")).as[Array[Byte]]
-        .map(b => IpcMessage(0L, 0L, b.length.toLong, b))
-      ArrowIpc.deserialize(spark, msgs, schema).collect()
+      ArrowIpc.deserialize(spark, PublishedFiles.read(spark, outDir), schema).collect()
         .map(r => (r.getAs[Long]("id"), r.getAs[Long]("v"),
           r.getAs[Long]("seq"))).toSeq
     }
     val baseArgs = Array("stream", "--in-dir", inDir, "--checkpoint", ckpt,
       "--out", outDir, "--schema-ddl", "id BIGINT, v BIGINT",
       "--max-rows", "64", "--seq-col")
-    writeBatch("part-000.json", 0 until 300)
+    writeLines(inDir, "part-000.json", 0 until 300)
     Main.main(baseArgs)
     val first = drained()
     assert(first.map(_._1).sorted == (0L until 300L),
       "first drain must publish exactly the first file's rows")
     assert(first.map(_._3).sorted == (0L until 300L), "seq must be 0..299")
     // a restart with NEW input: only the new file drains, seq continues
-    writeBatch("part-001.json", 300 until 500)
+    writeLines(inDir, "part-001.json", 300 until 500)
     Main.main(baseArgs)
     val second = drained()
     assert(second.map(_._1).sorted == (0L until 500L),
@@ -1538,39 +1536,77 @@ class CliSpec extends SparkSpec {
   }
 
   test("stream --in-dir --batch: seq recovery decodes .arrowbag envelopes") {
-    import spark.implicits._
     val tmp = Files.createTempDirectory("graft-cli-bagresume-").toString
     val inDir = s"$tmp/in"; val outDir = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-    Files.createDirectories(java.nio.file.Paths.get(inDir))
-    def writeBatch(name: String, ids: Range): Unit = {
-      val w = new PrintWriter(s"$inDir/$name")
-      ids.foreach(i => w.println(s"""{"id": $i, "v": ${i * 3}}"""))
-      w.close()
-    }
     def drained(): Seq[(Long, Long)] = {
       val schema = StructType.fromDDL("id BIGINT, v BIGINT, seq BIGINT")
-      val msgs = spark.read.format("binaryFile").load(s"$outDir/*.arrowbag")
-        .select(col("content")).as[Array[Byte]]
-        .flatMap(b => graft.streaming.BatchEnvelope.decode(b))
-      ArrowIpc.deserialize(spark, msgs, schema).collect()
+      ArrowIpc.deserialize(spark, PublishedFiles.read(spark, outDir), schema).collect()
         .map(r => (r.getAs[Long]("id"), r.getAs[Long]("seq"))).toSeq
     }
     val baseArgs = Array("stream", "--in-dir", inDir, "--checkpoint", ckpt,
       "--out", outDir, "--schema-ddl", "id BIGINT, v BIGINT",
       "--max-rows", "64", "--seq-col", "--batch")
-    writeBatch("part-000.json", 0 until 200)
+    writeLines(inDir, "part-000.json", 0 until 200)
     Main.main(baseArgs)
     val first = drained()
     assert(first.map(_._2).sorted == (0L until 200L), "seq must be 0..199")
     // the restart must recover max(seq)+1 from the ENVELOPE files — a
     // recovery that only scans .arrow would reseed at 0 and duplicate
-    writeBatch("part-001.json", 200 until 300)
+    writeLines(inDir, "part-001.json", 200 until 300)
     Main.main(baseArgs)
     val second = drained()
     assert(second.map(_._1).sorted == (0L until 300L),
       "resume must add exactly the new file's rows — no dups, no loss")
     assert(second.map(_._2).sorted == (0L until 300L),
       "seq must continue contiguously across a --batch restart")
+  }
+
+  test("stream --in-dir --latency: the dump meters exactly this run's input lines") {
+    val tmp = Files.createTempDirectory("graft-cli-lat-").toString
+    val inDir = s"$tmp/in"
+    val n = 700
+    (0 until 7).foreach(f => writeLines(inDir, s"part-$f.json", f * 100 until (f + 1) * 100))
+    val latFile = s"$tmp/latency.json"
+    val metFile = s"$tmp/metrics.json"
+    Main.main(Array("stream", "--in-dir", inDir, "--checkpoint", s"$tmp/ckpt",
+      "--out", s"$tmp/out", "--schema-ddl", "id BIGINT, v BIGINT",
+      "--latency", latFile, "--metrics", metFile))
+    // read right after the verb returns: the dumps must already hold every
+    // micro-batch of this run, and none of an earlier query's
+    val lat = Files.readString(java.nio.file.Paths.get(latFile))
+    val sampleRows = "\"input_rows\":(\\d+)".r
+      .findAllMatchIn(lat).map(_.group(1).toLong).sum
+    assert(sampleRows == n, s"latency samples meter exactly $n rows: $lat")
+    val met = Files.readString(java.nio.file.Paths.get(metFile))
+    assert(met.contains(s"\"rows_published\":$n,"), s"metrics totals: $met")
+    assert(met.contains(s"\"rows_total\":$n.0"), s"metrics latency summary: $met")
+  }
+
+  test("stream rejects non-positive --max-rows / --max-ipc before opening a source") {
+    val port = { val s = new ServerSocket(0); try s.getLocalPort finally s.close() }
+    val out = Files.createTempDirectory("graft-cli-limits-").toString
+    def run(flag: String): IllegalArgumentException =
+      intercept[IllegalArgumentException] {
+        Main.main(Array("stream", "--port", port.toString, "--out", out,
+          "--schema-ddl", "id BIGINT", flag, "0"))
+      }
+    assert(run("--max-rows").getMessage.contains("--max-rows"))
+    assert(run("--max-ipc").getMessage.contains("--max-ipc"))
+  }
+
+  test("stream --in-dir fails on a line with a field outside the schema, naming it") {
+    val tmp = Files.createTempDirectory("graft-cli-strict-").toString
+    val inDir = s"$tmp/in"
+    writeLines(inDir, "part-0.json", 0 until 50, """{"id": 50, "v": 150, "stowaway": 1}""")
+    val e = intercept[Exception] {
+      Main.main(Array("stream", "--in-dir", inDir, "--checkpoint", s"$tmp/ckpt",
+        "--out", s"$tmp/out", "--schema-ddl", "id BIGINT, v BIGINT"))
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(e).exists(c => String.valueOf(c.getMessage).contains("stowaway")),
+      s"the error names the unexpected field: $e")
+    spark.streams.resetTerminated()
   }
 
   test("neardup subcommand: banded pairs equal c71; --index equals bandedIndexOf") {

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.metrics.LatencyListener
-import graft.streaming.{CollectingPublisher, StreamPipeline}
+import graft.metrics.{LatencyListener, StageTimers}
+import graft.streaming.{NoopPublisher, StreamPipeline}
 
 /** a9 latency-tracking spec: the listener must observe every micro-batch
   * of a pipeline run with sane durations. */
@@ -21,25 +21,29 @@ class MetricsSpec extends SparkSpec {
       val lines = ev.select(to_json(struct(ev.columns.map(col): _*)).as("j"))
         .as[String].collect().toSeq
       val stream = MemoryStream[String]
-      CollectingPublisher.clear()
-      val q = StreamPipeline.publishStream(stream.toDF(), ev.schema, 4096,
-        _ => new CollectingPublisher).start()
+      val ledger = new StreamPipeline.Ledger(Some(StageTimers(spark.sparkContext)))
+      val q = StreamPipeline.publishStream(stream.toDF(), ev.schema,
+        _ => new NoopPublisher, ledger = ledger).start()
       try {
         lines.grouped(math.max(1, lines.length / 3 + 1)).foreach { chunk =>
           stream.addData(chunk)
           q.processAllAvailable()
         }
       } finally q.stop()
-      // listener events are delivered asynchronously
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (listener.samples.map(_.inputRows).sum < lines.length &&
-             System.nanoTime() < deadline) Thread.sleep(50)
-      val s = listener.samples.filter(_.inputRows > 0)
+      // listener events are delivered asynchronously: the termination
+      // event follows every progress event of the run
+      assert(listener.awaitTerminated(q.runId, 10000L), "termination delivered")
+      val s = listener.samples(q.runId).filter(_.inputRows > 0)
       assert(s.map(_.inputRows).sum == lines.length, "every row metered")
       assert(s.forall(b => b.triggerMs >= b.addBatchMs && b.triggerMs >= 0))
-      val sum = listener.summary
-      assert(sum("rows_total") >= lines.length.toDouble)
+      val sum = listener.summary(q.runId)
+      assert(sum("rows_total") == lines.length.toDouble)
       assert(sum("trigger_ms_max") >= sum("trigger_ms_avg"))
+      // the pipeline's own ledger: exact publish totals and one stage
+      // sample per micro-batch that ran
+      assert(ledger.rows == lines.length)
+      assert(ledger.stageSamples.map(_.batchId).toSet == s.map(_.batchId).toSet)
+      assert(ledger.timers.get.parseMs > 0 && ledger.timers.get.serializeMs > 0)
     } finally spark.streams.removeListener(listener)
   }
 

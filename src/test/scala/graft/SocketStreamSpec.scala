@@ -29,8 +29,7 @@ class SocketStreamSpec extends SparkSpec {
     writerThread.start()
 
     val schema = StructType(Seq(StructField("v", LongType)))
-    val lines = spark.readStream.format("socket")
-      .option("host", "127.0.0.1").option("port", port).load()
+    val lines = StreamPipeline.socketLines(spark, "127.0.0.1", port.toString)
     val q = StreamPipeline.convert(lines, schema)
       .writeStream.outputMode("append").format("memory").queryName("d1_sock").start()
     try {

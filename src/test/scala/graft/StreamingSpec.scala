@@ -18,8 +18,7 @@ class StreamingSpec extends SparkSpec {
       col("event_id"), unix_micros(col("ts")).as("ts_us"),
       col("user_id"), col("event_type"), col("value"))
     // the two-sided exceptAll is the delivery proof: had the publisher
-    // received nothing, `out` would be empty and the second check fails
-    // (the harness clears its buffer after the run for heap hygiene)
+    // written nothing, `out` would be empty and the second check fails
     assert(out.exceptAll(ev).count() == 0 && ev.exceptAll(out).count() == 0)
     assert(out.count() > 0)
   }
@@ -42,7 +41,7 @@ class StreamingSpec extends SparkSpec {
     val outStr = out.toString // capture a String: Path is not serializable
     def runOnce(): Unit = {
       val q = StreamPipeline.publishStream(
-          spark.readStream.text(src.toString), schema, maxRows = 4096,
+          StreamPipeline.fileLines(spark, src.toString), schema,
           epoch => new graft.streaming.FilePublisher(outStr, epoch))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation", base.resolve("ckpt").toString)
@@ -54,10 +53,8 @@ class StreamingSpec extends SparkSpec {
     runOnce() // drains chunk 1, then shuts down (bolson drain contract)
     writeChunk("part2.txt", second)
     runOnce() // MUST resume from the checkpoint: only chunk 2 is new
-    val files = spark.read.format("binaryFile").load(s"$out/*.arrow")
-      .select(col("content")).as[Array[Byte]]
-      .map(b => graft.ipc.IpcMessage(0L, 0L, b.length.toLong, b))
-    val published = graft.ipc.ArrowIpc.deserialize(spark, files, schema)
+    val published = graft.ipc.ArrowIpc.deserialize(spark,
+      graft.streaming.PublishedFiles.read(spark, outStr), schema)
     assert(published.count() == lines.length,
       "restart must neither drop nor re-publish rows")
     assert(published.exceptAll(ev).count() == 0 && ev.exceptAll(published).count() == 0,
